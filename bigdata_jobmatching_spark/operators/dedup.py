@@ -905,9 +905,10 @@ def semantic_blocks(
     # eager materialization below — v now carries seed_dist, and every
     # former asg consumer (per-cluster stats, the keep-farthest sides,
     # nb) reads v's j==0 rows or qv instead. The census went from four
-    # upfront materialization jobs (qv, asg, v, norms) to two (qv, v);
-    # at the bench corpus the fixed job/stage overhead of those two
-    # extra materializations was the dominant cost of the whole query.
+    # upfront materialization jobs (qv, asg, v, norms) to three
+    # (qv, v, norms — norms is still eagerly checkpointed below); at
+    # the bench corpus the fixed job/stage overhead of the dropped
+    # materialization was the dominant cost of the whole query.
     asg_plan = (
         qv.join(F_.broadcast(cent), "j")
         .groupBy("__id", "cid")

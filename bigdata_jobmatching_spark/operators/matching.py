@@ -82,6 +82,11 @@ def match_offers_cvs(
     # Partition count is pinned (AQE would coalesce the tiny skill
     # exchange to 1 partition and serialize the whole pair aggregate);
     # default_parallelism() is env-parameterised like fan_out.
+    # The job_id partitioning survives only while the skill join is
+    # planned as a broadcast join of c_sk; once c_sk outgrows the
+    # broadcast threshold, a shuffle join re-partitions both sides on
+    # skill and this exchange degrades to an extra one (results stay
+    # the same).
     shared = (
         o_sk.repartition(default_parallelism(), "job_id")
         .join(c_sk, "skill")

@@ -26,7 +26,12 @@ connector contributes on the Spark side of the wire:
 - **options**: ``path`` (broker dir), ``subscribe`` (topic),
   ``startingOffsets`` earliest|latest, ``maxOffsetsPerTrigger``
   (per-batch row cap across partitions, the backpressure knob the
-  reference sets inertly via DStream confs).
+  reference sets inertly via DStream confs). The cap is for
+  processing-time triggers only: Spark 4.1's Python source API has no
+  admission control, so an availableNow query runs exactly ONE batch
+  ending at ``latestOffset()``; a capped end would leave the rest of
+  the backlog for the next query. Consumers that drain with
+  availableNow leave the option unset (streaming/ingest.py).
 
 What it deliberately does NOT cover: the TCP broker protocol,
 consumer groups, and transactional producers — those live beyond the
@@ -35,10 +40,15 @@ double, S1 is exercised by EXECUTION (subscribe -> offsets ->
 micro-batches -> decode -> lake landing, restart included) rather
 than by construction.
 
-Scale note: one input partition per topic partition, read in
-parallel by executors exactly like the real connector's 1:1
-Kafka-partition-to-Spark-partition mapping; a production swap is
-``format("kafka_wire") -> format("kafka")`` plus broker options.
+Scale note: the stream reader is a partitioned
+``DataSourceStreamReader``. The driver only plans offsets (line counts,
+kept incrementally per partition file); each micro-batch is one input
+partition per topic partition with new records, streamed lazily by
+executors in parallel, exactly like the real connector's 1:1
+Kafka-partition-to-Spark-partition mapping. A batch's task count is
+therefore the number of topic partitions that received records. A
+production swap is ``format("kafka_wire") -> format("kafka")`` plus
+broker options.
 """
 
 from __future__ import annotations
@@ -52,8 +62,8 @@ from collections.abc import Iterator
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 WIRE_SCHEMA = (
@@ -142,11 +152,14 @@ def _read_slice(
 
 
 # (file byte size -> line count) per partition file: the log is
-# append-only, so an unchanged size means an unchanged count — end
-# offsets stay O(1) per idle trigger instead of re-counting the whole
-# log every 30 s forever (a continuously-running stream would
-# otherwise pay O(total) per trigger even with zero new records)
+# append-only, so an unchanged size means an unchanged count and a
+# larger size means the old count plus the newlines in the appended
+# bytes — each trigger's cost grows with the new records, not with the
+# topic's retention (a continuously-running stream would otherwise pay
+# O(total) per trigger forever). Only complete lines count: a record
+# still being appended stays invisible until its newline lands.
 _COUNT_CACHE: dict[str, tuple[int, int]] = {}
+_COUNT_CHUNK = 1 << 20
 
 
 def _end_offsets(path: str, topic: str) -> dict[str, int]:
@@ -154,13 +167,15 @@ def _end_offsets(path: str, topic: str) -> dict[str, int]:
     for p in _list_partitions(path, topic):
         f = _partition_file(path, topic, p)
         size = os.path.getsize(f)
-        cached = _COUNT_CACHE.get(f)
-        if cached is not None and cached[0] == size:
-            out[str(p)] = cached[1]
-            continue
-        with open(f) as fh:
-            n = sum(1 for _ in fh)
-        _COUNT_CACHE[f] = (size, n)
+        seen, n = _COUNT_CACHE.get(f, (0, 0))
+        if size < seen:  # not this log any more (recreated): recount
+            seen, n = 0, 0
+        if size > seen:
+            with open(f, "rb") as fh:
+                fh.seek(seen)
+                for chunk in iter(lambda: fh.read(_COUNT_CHUNK), b""):
+                    n += chunk.count(b"\n")
+                _COUNT_CACHE[f] = (fh.tell(), n)
         out[str(p)] = n
     return out
 
@@ -191,43 +206,75 @@ class KafkaWireBatchReader(DataSourceReader):
             self.path, self.topic, part.partition, part.lo, part.hi)
 
 
-class KafkaWireStreamReader(SimpleDataSourceStreamReader):
+def _cap_offsets(start: dict, end: dict, budget: int) -> dict:
+    """``end`` cut to at most ``budget`` records past ``start`` in
+    total (connector semantics: proportional cap; here a greedy fill in
+    partition order). Partitions the cap skips keep their start."""
+    capped = {k: int(v) for k, v in start.items()}
+    for p in sorted(end, key=int):
+        lo = int(start.get(p, 0))
+        take = max(min(int(end[p]) - lo, budget), 0)
+        capped[p] = lo + take
+        budget -= take
+    return capped
+
+
+class KafkaWireStreamReader(DataSourceStreamReader):
     """Offset = {partition(str): next unread line index}. The log is
     append-only and immutable below the end offset, so replaying
-    [start, end) is exact — the property checkpoint recovery needs."""
+    [start, end) is exact — the property checkpoint recovery needs.
+
+    The driver only plans offsets; ``partitions`` turns a batch into
+    one :class:`_WirePartition` per topic partition with new records,
+    and executors stream those slices in parallel (the connector's 1:1
+    Kafka-partition-to-Spark-partition mapping)."""
 
     def __init__(self, options) -> None:
         self.path = options["path"]
         self.topic = options["subscribe"]
         self.starting = options.get("startingOffsets", "earliest")
         self.max_per_trigger = int(options.get("maxOffsetsPerTrigger", 0))
+        self._initial: dict | None = None
+        # end of the last planned batch: the base the per-trigger cap
+        # counts from, since latestOffset() is not told the start.
+        # Seeded by the first partitions()/commit() call on a restart
+        # from a checkpoint, else by the initial offset.
+        self._planned: dict | None = None
 
     def initialOffset(self) -> dict:
-        if self.starting == "latest":
-            return _end_offsets(self.path, self.topic)
-        return {str(p): 0 for p in _list_partitions(self.path, self.topic)}
+        if self._initial is None:
+            if self.starting == "latest":
+                self._initial = _end_offsets(self.path, self.topic)
+            else:
+                self._initial = {
+                    str(p): 0 for p in _list_partitions(self.path, self.topic)}
+        return self._initial
 
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
+    def latestOffset(self) -> dict:
         end = _end_offsets(self.path, self.topic)
-        # honor maxOffsetsPerTrigger across partitions (connector
-        # semantics: proportional cap; here simple round-robin fill)
-        if self.max_per_trigger:
-            budget = self.max_per_trigger
-            capped: dict[str, int] = {}
-            for p in sorted(end, key=int):
-                lo = int(start.get(p, 0))
-                take = min(end[p] - lo, budget)
-                capped[p] = lo + max(take, 0)
-                budget -= max(take, 0)
-            end = capped
-        rows: list[tuple] = []
-        for p in sorted(end, key=int):
-            lo = int(start.get(p, 0))
-            rows.extend(_read_slice(self.path, self.topic, int(p), lo, end[p]))
-        # carry forward partitions the cap skipped entirely
-        merged = {**{k: int(v) for k, v in start.items()},
-                  **{k: int(v) for k, v in end.items()}}
-        return iter(rows), merged
+        if not self.max_per_trigger:
+            return end
+        if self._planned is None:
+            self._planned = self.initialOffset()
+        self._planned = _cap_offsets(self._planned, end, self.max_per_trigger)
+        return self._planned
+
+    def partitions(self, start: dict, end: dict) -> list[_WirePartition]:
+        if self._planned is None:
+            self._planned = end
+        return [
+            _WirePartition(int(p), int(start.get(p, 0)), int(hi))
+            for p, hi in sorted(end.items(), key=lambda kv: int(kv[0]))
+            if int(hi) > int(start.get(p, 0))
+        ]
+
+    def read(self, part: _WirePartition) -> Iterator[tuple]:
+        return _read_slice(
+            self.path, self.topic, part.partition, part.lo, part.hi)
+
+    def commit(self, end: dict) -> None:
+        if self._planned is None:
+            self._planned = end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         for p in sorted(end, key=int):
@@ -246,7 +293,7 @@ class KafkaWireDataSource(DataSource):
     def reader(self, schema) -> KafkaWireBatchReader:
         return KafkaWireBatchReader(self.options)
 
-    def simpleStreamReader(self, schema) -> KafkaWireStreamReader:
+    def streamReader(self, schema) -> KafkaWireStreamReader:
         return KafkaWireStreamReader(self.options)
 
 

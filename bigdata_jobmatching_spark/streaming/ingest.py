@@ -6,9 +6,14 @@ applied unchanged to the streaming DataFrame — one definition of the
 semantics for both paths. Differences from the reference:
 
 - ``maxOffsetsPerTrigger`` replaces the inert DStream backpressure
-  confs (SURVEY §2.9).
-- ``Trigger.AvailableNow`` drains the backlog deterministically for
-  tests; production uses a processing-time trigger.
+  confs (SURVEY §2.9) — on processing-time triggers only.
+- ``Trigger.AvailableNow`` drains the backlog in ONE micro-batch:
+  Spark 4.1's Python source API has no admission control, so an
+  availableNow query over a Python source runs exactly one batch, and
+  the Kafka consumers leave the per-trigger cap unset for it — the
+  batch lands everything available at query start (the AvailableNow
+  contract) instead of a capped slice that strands the rest until the
+  next round. Processing-time triggers keep the 10,000-record cap.
 - A watermarked tumbling-window count stream is provided as the
   idiomatic upgrade of the "offers per day" dashboard (the reference
   lands raw rows only and counts later in batch).
@@ -192,16 +197,21 @@ def read_kafka_offer_stream(
     topic: str = "job_offers_raw",
     source_format: str = "kafka_wire",
     starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int = 10_000,
+    max_offsets_per_trigger: int | None = 10_000,
 ) -> DataFrame:
     """S1 as an EXECUTING path (round-10): subscribe to a topic and
     return connector-shaped wire rows. Default source is the
     file-backed wire double (sources/kafka_wire.py — partitioned
-    offset logs, connector output schema, maxOffsetsPerTrigger); a
-    cluster with the spark-sql-kafka jar swaps
-    ``source_format="kafka"`` and passes the broker address as
-    ``broker_path``, with every option name and everything downstream
-    unchanged (consume_jobs.py:93-100)."""
+    offset logs read by executors one task per topic partition,
+    connector output schema, maxOffsetsPerTrigger); a cluster with the
+    spark-sql-kafka jar swaps ``source_format="kafka"`` and passes the
+    broker address as ``broker_path``, with every option name and
+    everything downstream unchanged (consume_jobs.py:93-100).
+
+    ``max_offsets_per_trigger`` caps each processing-time micro-batch;
+    ``None`` leaves it unset, which is what an availableNow query
+    wants: that query runs a single batch, so a cap would strand every
+    record beyond it until the next query."""
     if source_format == "kafka_wire":
         from ..sources.kafka_wire import register_kafka_wire
 
@@ -211,12 +221,17 @@ def read_kafka_offer_stream(
     else:
         reader = spark.readStream.format(source_format).option(
             "kafka.bootstrap.servers", broker_path)
-    return (
-        reader.option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .option("maxOffsetsPerTrigger", max_offsets_per_trigger)
-        .load()
-    )
+    reader = reader.option("subscribe", topic).option(
+        "startingOffsets", starting_offsets)
+    if max_offsets_per_trigger is not None:
+        reader = reader.option("maxOffsetsPerTrigger", max_offsets_per_trigger)
+    return reader.load()
+
+
+def _trigger_cap(available_now: bool) -> int | None:
+    """Per-trigger cap for the Kafka consumers: none for the
+    single-batch availableNow drain, 10,000 records otherwise."""
+    return None if available_now else 10_000
 
 
 def stream_kafka_offers_to_lake(
@@ -234,7 +249,8 @@ def stream_kafka_offers_to_lake(
     normalize -> partitioned parquet lake, checkpointed for
     exactly-once across restarts."""
     wire = read_kafka_offer_stream(
-        spark, broker_path, topic, source_format)
+        spark, broker_path, topic, source_format,
+        max_offsets_per_trigger=_trigger_cap(available_now))
     offers = decode_kafka_offers(wire.filter("value IS NOT NULL"))
     normalized = normalize_offers(offers)
     writer = (
@@ -269,7 +285,9 @@ def stream_kafka_cvs_to_lake(
     :func:`read_kafka_offer_stream` — topic-generic despite the name:
     it returns connector-shaped rows for whatever topic it is given,
     and only the decode step downstream is schema-specific."""
-    wire = read_kafka_offer_stream(spark, broker_path, topic, source_format)
+    wire = read_kafka_offer_stream(
+        spark, broker_path, topic, source_format,
+        max_offsets_per_trigger=_trigger_cap(available_now))
     cvs = decode_kafka_cvs(wire.filter("value IS NOT NULL"))
     normalized = normalize_cvs(cvs)
     writer = (

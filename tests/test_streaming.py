@@ -359,8 +359,9 @@ def test_kafka_wire_consume_end_to_end(spark, tmp_path):
 
 def test_kafka_wire_source_semantics(spark, tmp_path):
     """The wire double's connector contracts: exact output schema,
-    batch face, startingOffsets=latest skips the backlog, and
-    maxOffsetsPerTrigger caps each micro-batch."""
+    batch face, and startingOffsets=latest skips the backlog (the
+    maxOffsetsPerTrigger cap is pinned by
+    test_kafka_wire_processing_time_cap_and_restart)."""
     from bigdata_jobmatching_spark.sources import kafka_wire as KW
 
     broker = str(tmp_path / "broker")
@@ -611,59 +612,170 @@ def test_kafka_wire_timestamp_is_true_instant(spark, tmp_path):
 
 def test_kafka_wire_offset_protocol_properties(tmp_path):
     """Property test of the wire double's offset protocol (pure
-    Python, no Spark): for ANY interleaving of produces and reads,
-    chaining read() from the initial offset loses nothing, duplicates
-    nothing, and readBetweenOffsets replays each slice exactly."""
+    Python, no Spark), driven the way the engine drives it —
+    latestOffset -> partitions -> read per partition: for ANY
+    interleaving of produces and batches, under every cap in
+    {0, 3, 7}, chaining batches from the initial offset loses nothing,
+    duplicates nothing, keeps each batch within the cap as one input
+    partition per topic partition, and readBetweenOffsets replays each
+    slice exactly."""
     import random
 
     from bigdata_jobmatching_spark.sources import kafka_wire as KW
 
-    rng = random.Random(20260816)
-    broker = str(tmp_path / "broker")
-    topic = "prop"
-    produced: list[bytes] = []
+    def batch(reader, start):
+        end = reader.latestOffset()
+        parts = reader.partitions(start, end)
+        assert len({p.partition for p in parts}) == len(parts)
+        rows = [r for part in parts for r in reader.read(part)]
+        return rows, end
 
-    reader = KW.KafkaWireStreamReader(
-        {"path": broker, "subscribe": topic, "maxOffsetsPerTrigger":
-         str(rng.choice([0, 3, 7]))})
-    offset = reader.initialOffset()
-    consumed: list[bytes] = []
-    batches: list[tuple[dict, dict]] = []
-    for step in range(40):
-        if rng.random() < 0.5:
-            n = rng.randint(0, 4)
-            recs = [(f"k{len(produced) + i}".encode(),
-                     f"v{len(produced) + i}".encode()) for i in range(n)]
-            KW.produce(broker, topic, recs, partitions=3)
-            produced.extend(v for _, v in recs)
-        else:
-            rows, nxt = reader.read(offset)
-            rows = list(rows)
+    for cap in (0, 3, 7):
+        rng = random.Random(20260816 + cap)
+        broker = str(tmp_path / f"broker_{cap}")
+        topic = "prop"
+        produced: list[bytes] = []
+
+        reader = KW.KafkaWireStreamReader(
+            {"path": broker, "subscribe": topic,
+             "maxOffsetsPerTrigger": str(cap)})
+        offset = reader.initialOffset()
+        consumed: list[bytes] = []
+        batches: list[tuple[dict, dict]] = []
+        for step in range(40):
+            if rng.random() < 0.5:
+                n = rng.randint(0, 4)
+                recs = [(f"k{len(produced) + i}".encode(),
+                         f"v{len(produced) + i}".encode())
+                        for i in range(n)]
+                KW.produce(broker, topic, recs, partitions=3)
+                produced.extend(v for _, v in recs)
+            else:
+                rows, nxt = batch(reader, offset)
+                assert not cap or len(rows) <= cap
+                batches.append((dict(offset), dict(nxt)))
+                consumed.extend(bytes(r[1]) for r in rows)
+                offset = nxt
+        # drain whatever remains (cap may need several batches)
+        for _ in range(200):
+            rows, nxt = batch(reader, offset)
+            assert not cap or len(rows) <= cap
+            if not rows and nxt == offset:
+                break
             batches.append((dict(offset), dict(nxt)))
             consumed.extend(bytes(r[1]) for r in rows)
             offset = nxt
-    # drain whatever remains (cap may need several reads)
-    for _ in range(200):
-        rows, nxt = reader.read(offset)
-        rows = list(rows)
-        if not rows and nxt == offset:
-            break
-        batches.append((dict(offset), dict(nxt)))
-        consumed.extend(bytes(r[1]) for r in rows)
-        offset = nxt
-    # exactly-once: multiset equality (order differs across partitions)
-    assert sorted(consumed) == sorted(produced)
-    # replay: every recorded batch replays to the identical multiset
-    for start, end in batches:
-        replay = [bytes(r[1])
-                  for r in reader.readBetweenOffsets(start, end)]
-        direct_rows, _ = KW.KafkaWireStreamReader(
-            {"path": broker, "subscribe": topic}).read(start)
-        # replay slice == the rows whose offsets fall in [start, end)
-        want = [bytes(r[1]) for r in direct_rows
-                if int(start.get(str(r[3]), 0)) <= r[4]
-                < int(end.get(str(r[3]), 0))]
-        assert sorted(replay) == sorted(want)
+        # exactly-once: multiset equality (order differs across
+        # partitions)
+        assert sorted(consumed) == sorted(produced)
+        # replay: every recorded batch replays to the identical multiset
+        for start, end in batches:
+            replay = [bytes(r[1])
+                      for r in reader.readBetweenOffsets(start, end)]
+            direct_rows, _ = batch(KW.KafkaWireStreamReader(
+                {"path": broker, "subscribe": topic}), start)
+            # replay slice == the rows whose offsets fall in [start, end)
+            want = [bytes(r[1]) for r in direct_rows
+                    if int(start.get(str(r[3]), 0)) <= r[4]
+                    < int(end.get(str(r[3]), 0))]
+            assert sorted(replay) == sorted(want)
+
+
+def _query_task_counts(spark, query) -> list[int]:
+    """Task count of every stage the streaming query ran (its jobs run
+    under the query's runId as job group)."""
+    tracker = spark.sparkContext.statusTracker()
+    return [
+        tracker.getStageInfo(sid).numTasks
+        for jid in sorted(tracker.getJobIdsForGroup(str(query.runId)))
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+
+
+def test_kafka_wire_cv_backlog_drains_in_one_available_now_batch(
+        spark, tmp_path):
+    """A consumer restart with a backlog over the 10,000-record
+    per-trigger cap lands ALL of it in one availableNow query: one
+    micro-batch (the Python source API runs exactly one batch for
+    availableNow, so a cap would strand the rest), read by one task
+    per topic partition."""
+    from bigdata_jobmatching_spark.sources import kafka_wire as KW
+    from bigdata_jobmatching_spark.streaming.ingest import (
+        stream_kafka_cvs_to_lake,
+    )
+    from tests.fixtures import make_cvs
+
+    broker = str(tmp_path / "broker")
+    cvs = make_cvs(10_250)
+    # 8-byte big-endian keys route CV i to partition i % 2
+    KW.produce(
+        broker, "candidate_cvs_raw",
+        [(i.to_bytes(8, "big"), json.dumps(c).encode())
+         for i, c in enumerate(cvs)],
+        partitions=2,
+    )
+    out, ckpt = str(tmp_path / "cv_lake"), str(tmp_path / "cv_ckpt")
+    q = stream_kafka_cvs_to_lake(spark, broker, out, ckpt)
+    q.awaitTermination(300)
+    data_batches = [p for p in q.recentProgress if p["numInputRows"]]
+    assert [p["numInputRows"] for p in data_batches] == [len(cvs)]
+    assert spark.read.parquet(out).count() == len(cvs)
+    # the batch's one stage (scan -> decode -> lake write, no
+    # shuffle): one task per topic partition
+    assert _query_task_counts(spark, q) == [2]
+
+
+def test_kafka_wire_processing_time_cap_and_restart(spark, tmp_path):
+    """maxOffsetsPerTrigger caps each processing-time micro-batch, and
+    a restart from the checkpoint part-way through lands the remaining
+    records exactly once."""
+    import time
+
+    from bigdata_jobmatching_spark.sources import kafka_wire as KW
+
+    broker = str(tmp_path / "broker")
+    # 8-byte big-endian keys route record i to partition i % 2
+    recs = [(i.to_bytes(8, "big"), f"v{i}".encode()) for i in range(12)]
+    KW.produce(broker, "t", recs, partitions=2)
+    KW.register_kafka_wire(spark)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def start():
+        return (spark.readStream.format("kafka_wire")
+                .option("path", broker).option("subscribe", "t")
+                .option("maxOffsetsPerTrigger", 3).load()
+                .writeStream.format("parquet")
+                .option("path", out).option("checkpointLocation", ckpt)
+                .trigger(processingTime="1 second").start())
+
+    def landed() -> list[bytes]:
+        try:
+            return [bytes(r.value) for r in
+                    spark.read.parquet(out).select("value").collect()]
+        except Exception:  # no batch committed yet
+            return []
+
+    def wait_for(cond, timeout=120):
+        deadline = time.time() + timeout
+        while not cond():
+            assert time.time() < deadline
+            time.sleep(0.05)
+
+    batch_sizes: list[int] = []
+    q = start()
+    wait_for(lambda: any(p["numInputRows"] for p in q.recentProgress))
+    q.stop()
+    batch_sizes += [p["numInputRows"] for p in q.recentProgress]
+    first = landed()
+    assert 0 < len(first) < len(recs)
+
+    q2 = start()
+    wait_for(lambda: len(landed()) >= len(recs))
+    q2.stop()
+    batch_sizes += [p["numInputRows"] for p in q2.recentProgress]
+    assert all(n <= 3 for n in batch_sizes)
+    got = landed()
+    assert sorted(got) == sorted(v for _, v in recs)  # exactly once
 
 
 def test_stream_fingerprint_assets_matches_batch(spark, tmp_path):
